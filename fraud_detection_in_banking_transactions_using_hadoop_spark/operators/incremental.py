@@ -14,8 +14,16 @@ streaming lookup merge.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
+    atomic_overwrite,
+    recover_table,
+)
 
 PARTIAL_COLS = ("n", "sum_v", "min_v", "max_v", "hll_v")
 
@@ -73,6 +81,48 @@ def finalize(state: DataFrame) -> DataFrame:
     )
 
 
+def fold_state(
+    spark: SparkSession,
+    state_path: str,
+    step: Callable[[DataFrame | None], DataFrame],
+    token: str,
+) -> None:
+    """One carried-state step behind the crash-safe swap: heal an
+    interrupted swap, hand the previous state to `step` (None on the
+    first batch, when no table, staging or backup exists yet), and
+    publish what it returns. Any other error -- a failed rename, a bad
+    merge -- propagates and fails the batch, so the checkpoint replays
+    it instead of committing a state that lost earlier batches."""
+    try:
+        recover_table(spark, state_path)
+    except FileNotFoundError:
+        prev = None
+    else:
+        prev = spark.read.parquet(state_path)
+    atomic_overwrite(step(prev), state_path, token)
+
+
+def replay_files(
+    spark: SparkSession,
+    src_glob: str,
+    schema: T.StructType,
+    fold: Callable[[DataFrame, int], None],
+) -> None:
+    """Replay the parquet files matched by `src_glob` as a stream, one
+    file per micro-batch (oldest first), through `fold(batch_df,
+    batch_id)`; return once every file is consumed. A batch whose fold
+    raises stops the query and re-raises here."""
+    q = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src_glob)
+        .writeStream.foreachBatch(fold)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
 def incremental_agg_update(
     spark: SparkSession,
     state_path: str,
@@ -83,16 +133,10 @@ def incremental_agg_update(
 ) -> None:
     """Fold one batch into the persisted aggregate state (create on
     first batch) behind the crash-safe swap."""
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-
     delta = partials_of(batch, key, value_col)
-    try:
-        recover_table(spark, state_path)
-        state = spark.read.parquet(state_path)
-    except FileNotFoundError:
-        delta.write.parquet(state_path)
-        return
-    atomic_overwrite(merge_partials(state, delta, key), state_path, token)
+    fold_state(
+        spark,
+        state_path,
+        lambda state: delta if state is None else merge_partials(state, delta, key),
+        token,
+    )

@@ -26,7 +26,8 @@ def merge_upsert(target: DataFrame, updates: DataFrame, key: str) -> DataFrame:
     return surviving.unionByName(updates.select(*target.columns))
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
+def hadoop_fs(spark: SparkSession, path: str):
+    """The Hadoop FileSystem serving `path`, plus the py4j JVM handle."""
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
@@ -54,23 +55,22 @@ def _sweep_stale_stages(fs, jvm, target: str) -> None:
         fs.delete(s.getPath(), True)
 
 
-def atomic_overwrite(df: DataFrame, target_path: str, token: str) -> None:
-    """Crash-safe overwrite of a Parquet directory.
-
-    The naive `read staging -> mode('overwrite') target` deletes the target
-    and then spends the whole rewrite window with no table on disk -- a
-    crash there loses the table and a checkpoint replay reruns against
-    nothing. Instead: write the new version to a token-unique staging dir
-    (two concurrent callers or a leftover dir can't collide), then swap it
-    in with two FS renames -- metadata-only operations, so the
-    no-current-table window shrinks from "full rewrite" to "one rename".
-    `recover_table` heals the rename window at next read.
-    """
-    spark = df.sparkSession
-    target = target_path.rstrip("/")
-    staging = f"{target}__stage_{token}"
+def write_staged(df: DataFrame, target_path: str, token: str) -> str:
+    """Write `df` to the token-unique staging dir beside `target_path`
+    (two concurrent callers or a leftover dir can't collide) and return
+    that dir. Nothing is visible at the target until `publish_staged`."""
+    staging = f"{target_path.rstrip('/')}__stage_{token}"
     df.write.mode("overwrite").parquet(staging)
-    fs, jvm = _hadoop_fs(spark, target)
+    return staging
+
+
+def publish_staged(spark: SparkSession, staging: str, target_path: str) -> None:
+    """Swap a completely written staging dir in as the target: move the
+    current table aside, rename staging into place, drop the old copy,
+    sweep stale stages. Both renames are metadata-only, so the
+    no-current-table window is one rename; `recover_table` heals it."""
+    target = target_path.rstrip("/")
+    fs, jvm = hadoop_fs(spark, target)
     P = jvm.org.apache.hadoop.fs.Path
     old = P(target + "__old")
     if fs.exists(old):
@@ -82,13 +82,24 @@ def atomic_overwrite(df: DataFrame, target_path: str, token: str) -> None:
     _sweep_stale_stages(fs, jvm, target)
 
 
+def atomic_overwrite(df: DataFrame, target_path: str, token: str) -> None:
+    """Crash-safe overwrite of a Parquet directory.
+
+    The naive `read staging -> mode('overwrite') target` deletes the target
+    and then spends the whole rewrite window with no table on disk -- a
+    crash there loses the table and a checkpoint replay reruns against
+    nothing. Instead: `write_staged` then `publish_staged`.
+    """
+    publish_staged(df.sparkSession, write_staged(df, target_path, token), target_path)
+
+
 def recover_table(spark: SparkSession, target_path: str) -> bool:
     """Heal an interrupted `atomic_overwrite` swap. If the target exists,
     no-op. Otherwise promote the newest COMPLETE staging dir (_SUCCESS
     marker present -- it finished writing before the swap began), else the
     `__old` backup. Returns True if a recovery action was taken."""
     target = target_path.rstrip("/")
-    fs, jvm = _hadoop_fs(spark, target)
+    fs, jvm = hadoop_fs(spark, target)
     P = jvm.org.apache.hadoop.fs.Path
     if fs.exists(P(target)):
         # healthy table; a crash after staging but before the first rename

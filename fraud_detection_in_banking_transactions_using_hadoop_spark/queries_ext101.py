@@ -82,25 +82,15 @@ def q_streaming_sprt_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="sprt_stream_"))
     src, state = base / "src", base / "state"
     ev = read_table(spark, sf_dir, "events").select("ts", "event_type")
     ev.repartition(4).write.parquet(str(src))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
 
     def fold(batch_df, batch_id):
         cur = (
@@ -116,23 +106,22 @@ def q_streaming_sprt_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("hit").cast("bigint").alias("k"),
             )
         )
-        try:
-            recover_table(spark, str(state))
-            merged = (
-                spark.read.parquet(str(state))
-                .unionByName(cur)
+
+        def advance(prev):
+            if prev is None:
+                return cur
+            return (
+                prev.unionByName(cur)
                 .groupBy("dt")
                 .agg(
                     F.sum("n").cast("bigint").alias("n"),
                     F.sum("k").cast("bigint").alias("k"),
                 )
             )
-            atomic_overwrite(merged, str(state), f"sprt{batch_id}")
-        except Exception:
-            cur.write.mode("overwrite").parquet(str(state))
 
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
+        fold_state(spark, str(state), advance, f"sprt{batch_id}")
+
+    replay_files(spark, str(src), ev.schema, fold)
 
     c1 = math.floor(1e9 * math.log(_SPRT_P1 / _SPRT_P0) + 0.5)
     c2 = math.floor(1e9 * math.log((1 - _SPRT_P1) / (1 - _SPRT_P0)) + 0.5)

@@ -87,38 +87,26 @@ def q_streaming_minhash_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         band_table,
         minhash_signatures,
     )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="minhash_stream_"))
     src, state = base / "src", base / "state"
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     docs.repartition(4).write.parquet(str(src))
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-
     def fold(batch_df, batch_id):
         sigs = minhash_signatures(batch_df, "doc_id", "text", n_hashes=_N_HASHES)
         bands = band_table(sigs, "doc_id", n_hashes=_N_HASHES, band_size=_BAND_SIZE)
-        try:
-            recover_table(spark, str(state))
-            merged = spark.read.parquet(str(state)).unionByName(bands)
-            atomic_overwrite(merged, str(state), f"mh{batch_id}")
-        except Exception:
-            bands.write.mode("overwrite").parquet(str(state))
 
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
+        def advance(prev):
+            return bands if prev is None else prev.unionByName(bands)
+
+        fold_state(spark, str(state), advance, f"mh{batch_id}")
+
+    replay_files(spark, str(src), docs.schema, fold)
 
     banded = spark.read.parquet(str(state))
     w = Window.partitionBy("band_id", "band_hash")

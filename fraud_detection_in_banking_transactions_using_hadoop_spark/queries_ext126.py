@@ -67,26 +67,16 @@ def q_streaming_bloom_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     from pathlib import Path
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="bloom_stream_"))
     src, state = base / "src", base / "state"
     ev = read_table(spark, sf_dir, "events").select("user_id", "event_type")
     members_src = ev.where(F.col("event_type") == "purchase").select("user_id")
     members_src.repartition(4).write.parquet(str(src))
-
-    stream = (
-        spark.readStream.schema(members_src.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
 
     def fold(batch_df, batch_id):
         bits = (
@@ -99,17 +89,13 @@ def q_streaming_bloom_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .distinct()
         )
-        try:
-            recover_table(spark, str(state))
-            merged = (
-                spark.read.parquet(str(state)).unionByName(bits).distinct()
-            )
-            atomic_overwrite(merged, str(state), f"bloom{batch_id}")
-        except Exception:
-            bits.write.mode("overwrite").parquet(str(state))
 
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
+        def advance(prev):
+            return bits if prev is None else prev.unionByName(bits).distinct()
+
+        fold_state(spark, str(state), advance, f"bloom{batch_id}")
+
+    replay_files(spark, str(src), members_src.schema, fold)
 
     bits = spark.read.parquet(str(state))
     members = members_src.distinct()

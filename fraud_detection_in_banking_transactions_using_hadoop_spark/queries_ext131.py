@@ -63,15 +63,11 @@ def q_streaming_ewma_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     from pathlib import Path
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="ewma_stream_"))
     src, state = base / "src", base / "state"
     ev = (
@@ -88,12 +84,6 @@ def q_streaming_ewma_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         parts.where(F.col("pt") == p).drop("pt").coalesce(1).write.parquet(
             str(src / f"part{p}")
         )
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "part*"))
-    )
 
     def fold(batch_df, batch_id):
         w = Window.partitionBy("user_id").orderBy("us", "event_id")
@@ -120,43 +110,38 @@ def q_streaming_ewma_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("inc_n"),
         )
-        try:
-            recover_table(spark, str(state))
-            prev = spark.read.parquet(str(state))
-            merged = (
-                inc_old.join(prev, "user_id", "full_outer")
-                .select(
-                    "user_id",
-                    F.when(
-                        F.col("m").isNull(), F.col("ewma")  # no new data
-                    )
-                    .when(
-                        F.col("ewma").isNull(), F.col("inc_n")  # new key
-                    )
-                    .otherwise(
-                        F.pow(F.lit(_R), F.col("m")) * F.col("ewma")
-                        + F.col("inc_o")
-                    )
-                    .alias("ewma"),
-                    (
-                        F.coalesce(F.col("seen"), F.lit(0))
-                        + F.coalesce(F.col("m"), F.lit(0))
-                    )
-                    .cast("bigint")
-                    .alias("seen"),
-                )
-            )
-            atomic_overwrite(merged, str(state), f"ewma{batch_id}")
-        except Exception:
-            first = inc_old.select(
-                "user_id",
-                F.col("inc_n").alias("ewma"),
-                F.col("m").cast("bigint").alias("seen"),
-            )
-            first.write.mode("overwrite").parquet(str(state))
 
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
+        def advance(prev):
+            if prev is None:
+                return inc_old.select(
+                    "user_id",
+                    F.col("inc_n").alias("ewma"),
+                    F.col("m").cast("bigint").alias("seen"),
+                )
+            return inc_old.join(prev, "user_id", "full_outer").select(
+                "user_id",
+                F.when(
+                    F.col("m").isNull(), F.col("ewma")  # no new data
+                )
+                .when(
+                    F.col("ewma").isNull(), F.col("inc_n")  # new key
+                )
+                .otherwise(
+                    F.pow(F.lit(_R), F.col("m")) * F.col("ewma")
+                    + F.col("inc_o")
+                )
+                .alias("ewma"),
+                (
+                    F.coalesce(F.col("seen"), F.lit(0))
+                    + F.coalesce(F.col("m"), F.lit(0))
+                )
+                .cast("bigint")
+                .alias("seen"),
+            )
+
+        fold_state(spark, str(state), advance, f"ewma{batch_id}")
+
+    replay_files(spark, str(src / "part*"), ev.schema, fold)
 
     final = spark.read.parquet(str(state))
     return final.select(

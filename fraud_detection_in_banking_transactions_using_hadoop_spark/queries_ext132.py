@@ -22,8 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fraud_detection_in_banking_transactions_using_hadoop_spark.functions.sqlmath import acklam_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext120 import _acklam_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
@@ -56,7 +56,7 @@ _LAMBDAS = (-1.0, -0.5, 0.0, 0.5, 1.0)
       FROM z),
     thresh AS (
       SELECT *,
-             -({_acklam_sql(f"({_ALPHA_T} / 2) / (m - i + 1)")}) AS z_crit
+             -({acklam_sql(f"({_ALPHA_T} / 2) / (m - i + 1)")}) AS z_crit
       FROM ranked),
     flags AS (
       SELECT *,
@@ -107,7 +107,7 @@ def q_holm_bonferroni_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = z.withColumn("i", F.row_number().over(w).cast("bigint"))
     pexpr = f"({_ALPHA_T} / 2) / (m - i + 1)"
     thresh = ranked.withColumn(
-        "z_crit", F.expr(f"-({_acklam_sql(pexpr)})")
+        "z_crit", F.expr(f"-({acklam_sql(pexpr)})")
     )
     wcum = Window.orderBy("i").rowsBetween(Window.unboundedPreceding, 0)
     flags = thresh.withColumn(

@@ -30,9 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fraud_detection_in_banking_transactions_using_hadoop_spark.functions.sqlmath import acklam_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.rank import with_global_rank
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext120 import _acklam_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
@@ -77,7 +77,7 @@ _FK_P = (
       FROM dspine),
     scored AS (
       SELECT dr.d,
-             CAST(floor(1e8 * ({_acklam_sql(_FK_P)}) + 0.5) AS BIGINT) AS a_e8
+             CAST(floor(1e8 * ({acklam_sql(_FK_P)}) + 0.5) AS BIGINT) AS a_e8
       FROM dr CROSS JOIN nn_t),
     grp AS (
       SELECT dc.prio,
@@ -184,7 +184,7 @@ def q_fligner_killeen(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = dr.withColumn("nn", F.lit(nn_lit).cast("bigint")).select(
         "d",
         F.expr(
-            f"CAST(floor(1e8 * ({_acklam_sql(_FK_P)}) + 0.5) AS BIGINT)"
+            f"CAST(floor(1e8 * ({acklam_sql(_FK_P)}) + 0.5) AS BIGINT)"
         ).alias("a_e8"),
     )
     # r14 (verdict item 5): the per-group score sums are a BOUNDED

@@ -79,15 +79,11 @@ def q_streaming_holt_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     from pathlib import Path
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="holt_stream_"))
     src, state = base / "src", base / "state"
     ev = (
@@ -108,12 +104,6 @@ def q_streaming_holt_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             str(src / f"part{p}")
         )
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "part*"))
-    )
-
     a, be = repr(_HA), repr(_HB)
     new_l = f"({a} * x + (1.0 - {a}) * (acc.l + acc.b))"
     step = (
@@ -132,10 +122,24 @@ def q_streaming_holt_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).cast("bigint").alias("m"),
             )
         )
-        try:
-            recover_table(spark, str(state))
-            prev = spark.read.parquet(str(state))
-            merged = arrs.join(prev, "user_id", "full_outer").select(
+
+        def advance(prev):
+            if prev is None:
+                return arrs.select(
+                    "user_id",
+                    F.expr(
+                        "aggregate(slice(ys, 2, cast(m AS INT) - 1),"
+                        " named_struct('l', ys[0], 'b', CAST(0.0 AS DOUBLE)),"
+                        f" {step})"
+                    ).alias("st"),
+                    F.col("m").cast("bigint").alias("seen"),
+                ).select(
+                    "user_id",
+                    F.col("st.l").alias("l"),
+                    F.col("st.b").alias("b"),
+                    "seen",
+                )
+            return arrs.join(prev, "user_id", "full_outer").select(
                 "user_id",
                 F.expr(
                     "CASE WHEN m IS NULL THEN named_struct('l', l, 'b', b) "
@@ -158,26 +162,10 @@ def q_streaming_holt_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("st.b").alias("b"),
                 "seen",
             )
-            atomic_overwrite(merged, str(state), f"holt{batch_id}")
-        except Exception:
-            first = arrs.select(
-                "user_id",
-                F.expr(
-                    "aggregate(slice(ys, 2, cast(m AS INT) - 1),"
-                    " named_struct('l', ys[0], 'b', CAST(0.0 AS DOUBLE)),"
-                    f" {step})"
-                ).alias("st"),
-                F.col("m").cast("bigint").alias("seen"),
-            ).select(
-                "user_id",
-                F.col("st.l").alias("l"),
-                F.col("st.b").alias("b"),
-                "seen",
-            )
-            first.write.mode("overwrite").parquet(str(state))
 
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
+        fold_state(spark, str(state), advance, f"holt{batch_id}")
+
+    replay_files(spark, str(src / "part*"), ev.schema, fold)
 
     final = spark.read.parquet(str(state))
     return final.select(

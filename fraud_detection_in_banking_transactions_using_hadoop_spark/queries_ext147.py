@@ -28,32 +28,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
-from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table, spread
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext172 import _md5_media
+from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _QN_D = 2.21914  # Qn consistency constant for the normal
-
-
-def _md5_media(docs: DataFrame) -> DataFrame:
-    # codec work downstream (mapInPandas encode/decode) is the dominant
-    # per-row cost; fan the single-row-group scan out first so it runs
-    # at cluster width (readers.spread no-ops on already-parallel input)
-    docs = spread(docs)
-    d = F.col("doc_id").cast("string")
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.substring(
-            F.unhex(
-                F.concat(
-                    F.md5(F.concat(d, F.lit("a"))),
-                    F.md5(F.concat(d, F.lit("b"))),
-                    F.md5(F.concat(d, F.lit("c"))),
-                    F.md5(F.concat(d, F.lit("d"))),
-                )
-            ),
-            1,
-            60,
-        ).alias("content"),
-    )
 
 
 _MD5_HEX_SQL = """

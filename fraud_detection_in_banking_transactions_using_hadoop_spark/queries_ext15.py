@@ -95,25 +95,15 @@ def q_streaming_cms_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     from pathlib import Path
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="cms_stream_"))
     src, state = base / "src", base / "state"
     ev = read_table(spark, sf_dir, "events").select("user_id")
     ev.repartition(4).write.parquet(str(src))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
     rows = F.explode(F.array(*[F.lit(i) for i in range(4)])).alias("row_id")
 
     def fold(batch_df, batch_id):
@@ -123,20 +113,19 @@ def q_streaming_cms_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("row_id", "bucket")
             .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         )
-        try:
-            recover_table(spark, str(state))
-            merged = (
-                spark.read.parquet(str(state))
-                .unionByName(cells)
+
+        def advance(prev):
+            if prev is None:
+                return cells
+            return (
+                prev.unionByName(cells)
                 .groupBy("row_id", "bucket")
                 .agg(F.sum("c").cast("bigint").alias("c"))
             )
-            atomic_overwrite(merged, str(state), f"cms{batch_id}")
-        except Exception:
-            cells.write.mode("overwrite").parquet(str(state))
 
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
+        fold_state(spark, str(state), advance, f"cms{batch_id}")
+
+    replay_files(spark, str(src), ev.schema, fold)
 
     cells = spark.read.parquet(str(state))
     keys = ev.select(F.col("user_id").cast("bigint").alias("k")).distinct()

@@ -30,8 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fraud_detection_in_banking_transactions_using_hadoop_spark.functions.sqlmath import erf_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext141 import _erf_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
@@ -343,7 +343,7 @@ def q_embedding_energy_2sample(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(sum(CAST(v AS HUGEINT) * v) AS HUGEINT) AS sxx
       FROM daily),
     pit AS (
-      SELECT least(9, greatest(0, CAST(floor(10.0 * 0.5 * (1.0 + {_erf_sql(
+      SELECT least(9, greatest(0, CAST(floor(10.0 * 0.5 * (1.0 + {erf_sql(
           "(CAST(d2.v AS DOUBLE) - CAST(m.sx AS DOUBLE) / CAST(m.n AS DOUBLE))"
           " / sqrt((CAST(m.n AS DOUBLE) * m.sxx - CAST(m.sx AS DOUBLE) * m.sx)"
           "        / CAST(m.n AS DOUBLE) / (CAST(m.n AS DOUBLE) - 1.0))"
@@ -397,7 +397,7 @@ def q_pit_histogram_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest(
                 F.lit(0),
                 F.expr(
-                    f"CAST(floor(10.0 * 0.5 * (1.0 + {_erf_sql(z)})) AS BIGINT)"
+                    f"CAST(floor(10.0 * 0.5 * (1.0 + {erf_sql(z)})) AS BIGINT)"
                 ),
             ),
         ).alias("bin")

@@ -31,6 +31,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fraud_detection_in_banking_transactions_using_hadoop_spark.functions.sqlmath import erf_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
@@ -45,19 +46,6 @@ _LNK_BAR = sum(_LNK) / _KMAX
 _LNK_SXX = sum((x - _LNK_BAR) ** 2 for x in _LNK)
 _HIG_C = tuple((x - _LNK_BAR) / _LNK_SXX for x in _LNK)
 _SQRT2 = 1.4142135623730951
-
-# A&S 7.1.26 erf (shared literal polynomial, |err| < 1.5e-7)
-_ERF_A = (0.254829592, -0.284496736, 1.421413741, -1.453152027, 1.061405429)
-
-
-def _erf_sql(x: str) -> str:
-    t = f"(1.0 / (1.0 + 0.3275911 * abs({x})))"
-    poly = (
-        f"((((({_ERF_A[4]!r} * {t} + {_ERF_A[3]!r}) * {t} + {_ERF_A[2]!r})"
-        f" * {t} + {_ERF_A[1]!r}) * {t} + {_ERF_A[0]!r}) * {t})"
-    )
-    mag = f"(1.0 - {poly} * exp(-({x}) * ({x})))"
-    return f"(CASE WHEN ({x}) < 0.0 THEN -{mag} ELSE {mag} END)"
 
 
 # per-segment residual SS after linear detrend, shared double text over
@@ -379,7 +367,7 @@ def q_higuchi_fractal_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT n AS n_days,
            round(rvn, 6) AS rvn,
            round((rvn - 2.0) / sqrt(vr), 4) AS z,
-           round(1.0 - {_erf_sql(f"(abs((rvn - 2.0) / sqrt(vr)) / {_SQRT2!r})")},
+           round(1.0 - {erf_sql(f"(abs((rvn - 2.0) / sqrt(vr)) / {_SQRT2!r})")},
                  6) AS p_two_sided,
            abs((rvn - 2.0) / sqrt(vr)) > 1.959963984540054 AS reject_5pct
     FROM st
@@ -430,7 +418,7 @@ def q_bartels_rank_vn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             1.0
             - F.expr(
-                _erf_sql(
+                erf_sql(
                     "(abs((12.0 * CAST(nm AS DOUBLE) / (CAST(n AS DOUBLE)"
                     " * (CAST(n AS DOUBLE) * n - 1.0)) - 2.0)"
                     " / sqrt(CAST(4 * (n - 2) * (5 * CAST(n AS"

@@ -29,24 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fraud_detection_in_banking_transactions_using_hadoop_spark.functions.sqlmath import erf_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
 _SQRT2 = 1.4142135623730951
 _L = 6  # Bartlett truncation (weekly seasonality window)
-
-_ERF_A = (0.254829592, -0.284496736, 1.421413741, -1.453152027, 1.061405429)
-
-
-def _erf_sql(x: str) -> str:
-    t = f"(1.0 / (1.0 + 0.3275911 * abs({x})))"
-    poly = (
-        f"((((({_ERF_A[4]!r} * {t} + {_ERF_A[3]!r}) * {t} + {_ERF_A[2]!r})"
-        f" * {t} + {_ERF_A[1]!r}) * {t} + {_ERF_A[0]!r}) * {t})"
-    )
-    mag = f"(1.0 - {poly} * exp(-({x}) * ({x})))"
-    return f"(CASE WHEN ({x}) < 0.0 THEN -{mag} ELSE {mag} END)"
 
 
 _DAILY_SQL = """
@@ -123,7 +112,7 @@ def _daily_dollars(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(sqrt(mse7), 2) AS rmse_seasonal,
            round(dbar, 2) + 0.0 AS mean_loss_diff,
            round(dm, 4) + 0.0 AS dm_stat,
-           round(1.0 - {_erf_sql(f"(abs(dm) / {_SQRT2!r})")}, 6)
+           round(1.0 - {erf_sql(f"(abs(dm) / {_SQRT2!r})")}, 6)
              AS p_two_sided
     FROM st
     """,
@@ -233,7 +222,7 @@ def q_diebold_mariano(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.round(F.col("dbar"), 2) + F.lit(0.0)).alias("mean_loss_diff"),
         (F.round(F.col("dm"), 4) + F.lit(0.0)).alias("dm_stat"),
         F.round(
-            1.0 - F.expr(_erf_sql(f"(abs(dm) / {_SQRT2!r})")), 6
+            1.0 - F.expr(erf_sql(f"(abs(dm) / {_SQRT2!r})")), 6
         ).alias("p_two_sided"),
     )
 
@@ -279,7 +268,7 @@ def q_diebold_mariano(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(phat, 6) AS hit_rate,
            round(pstar, 6) AS expected_rate,
            round(pt, 4) + 0.0 AS pt_stat,
-           round(0.5 * (1.0 - {_erf_sql(f"(pt / {_SQRT2!r})")}), 6)
+           round(0.5 * (1.0 - {erf_sql(f"(pt / {_SQRT2!r})")}), 6)
              AS p_one_sided
     FROM z
     """,
@@ -348,7 +337,7 @@ def q_pesaran_timmermann(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("pstar"), 6).alias("expected_rate"),
         (F.round(F.col("pt"), 4) + F.lit(0.0)).alias("pt_stat"),
         F.round(
-            0.5 * (1.0 - F.expr(_erf_sql(f"(pt / {_SQRT2!r})"))), 6
+            0.5 * (1.0 - F.expr(erf_sql(f"(pt / {_SQRT2!r})"))), 6
         ).alias("p_one_sided"),
     )
 

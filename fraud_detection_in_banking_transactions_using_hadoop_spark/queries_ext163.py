@@ -28,24 +28,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fraud_detection_in_banking_transactions_using_hadoop_spark.functions.sqlmath import erf_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _K_CENTS = 5_000  # CUSUM reference: $50 per purchase
 _H_CENTS = 20_000  # alarm threshold on the peak: $200
 _SQRT2 = 1.4142135623730951
-
-_ERF_A = (0.254829592, -0.284496736, 1.421413741, -1.453152027, 1.061405429)
-
-
-def _erf_sql(x: str) -> str:
-    t = f"(1.0 / (1.0 + 0.3275911 * abs({x})))"
-    poly = (
-        f"((((({_ERF_A[4]!r} * {t} + {_ERF_A[3]!r}) * {t} + {_ERF_A[2]!r})"
-        f" * {t} + {_ERF_A[1]!r}) * {t} + {_ERF_A[0]!r}) * {t})"
-    )
-    mag = f"(1.0 - {poly} * exp(-({x}) * ({x})))"
-    return f"(CASE WHEN ({x}) < 0.0 THEN -{mag} ELSE {mag} END)"
 
 
 @register(
@@ -100,15 +89,11 @@ def q_streaming_cusum_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     from pathlib import Path
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="cusum_stream_"))
     src, state = base / "src", base / "state"
     ev = (
@@ -129,12 +114,6 @@ def q_streaming_cusum_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         parts.where(F.col("pt") == p).drop("pt").coalesce(1).write.parquet(
             str(src / f"part{p}")
         )
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "part*"))
-    )
 
     def fold(batch_df, batch_id):
         w = Window.partitionBy("user_id").orderBy("us", "event_id")
@@ -174,10 +153,20 @@ def q_streaming_cusum_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("kad"),
             F.max("pref").cast("bigint").alias("maxpref"),
         )
-        try:
-            recover_table(spark, str(state))
-            prev = spark.read.parquet(str(state))
-            merged = agg.join(prev, "user_id", "full_outer").select(
+
+        def advance(prev):
+            if prev is None:
+                return agg.select(
+                    "user_id",
+                    F.greatest(F.lit(0), F.col("maxsuffix"))
+                    .cast("bigint")
+                    .alias("s"),
+                    F.greatest(F.lit(0), F.col("kad")).cast("bigint").alias(
+                        "peak"
+                    ),
+                    F.col("m").cast("bigint").alias("seen"),
+                )
+            return agg.join(prev, "user_id", "full_outer").select(
                 "user_id",
                 F.when(F.col("m").isNull(), F.col("s"))
                 .otherwise(
@@ -207,22 +196,10 @@ def q_streaming_cusum_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint")
                 .alias("seen"),
             )
-            atomic_overwrite(merged, str(state), f"cusum{batch_id}")
-        except Exception:
-            first = agg.select(
-                "user_id",
-                F.greatest(F.lit(0), F.col("maxsuffix"))
-                .cast("bigint")
-                .alias("s"),
-                F.greatest(F.lit(0), F.col("kad")).cast("bigint").alias(
-                    "peak"
-                ),
-                F.col("m").cast("bigint").alias("seen"),
-            )
-            first.write.mode("overwrite").parquet(str(state))
 
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
+        fold_state(spark, str(state), advance, f"cusum{batch_id}")
+
+    replay_files(spark, str(src / "part*"), ev.schema, fold)
 
     final = spark.read.parquet(str(state))
     return final.select(
@@ -366,7 +343,7 @@ def q_base_stock_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM cnt)
     SELECT m AS n_pairs, t_up AS n_up,
            round(z, 4) AS z,
-           round(1.0 - {_erf_sql(f"(abs(z) / {_SQRT2!r})")}, 6)
+           round(1.0 - {erf_sql(f"(abs(z) / {_SQRT2!r})")}, 6)
              AS p_two_sided,
            abs(z) > 1.959963984540054 AS reject_5pct
     FROM st
@@ -422,7 +399,7 @@ def q_cox_stuart_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("t_up").alias("n_up"),
         F.round(F.col("z"), 4).alias("z"),
         F.round(
-            1.0 - F.expr(_erf_sql(f"(abs(z) / {_SQRT2!r})")), 6
+            1.0 - F.expr(erf_sql(f"(abs(z) / {_SQRT2!r})")), 6
         ).alias("p_two_sided"),
         (F.abs(F.col("z")) > 1.959963984540054).alias("reject_5pct"),
     )

@@ -25,24 +25,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fraud_detection_in_banking_transactions_using_hadoop_spark.functions.sqlmath import erf_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
 _SQRT2 = 1.4142135623730951
 _Z95 = 1.959963984540054
-
-_ERF_A = (0.254829592, -0.284496736, 1.421413741, -1.453152027, 1.061405429)
-
-
-def _erf_sql(x: str) -> str:
-    t = f"(1.0 / (1.0 + 0.3275911 * abs({x})))"
-    poly = (
-        f"((((({_ERF_A[4]!r} * {t} + {_ERF_A[3]!r}) * {t} + {_ERF_A[2]!r})"
-        f" * {t} + {_ERF_A[1]!r}) * {t} + {_ERF_A[0]!r}) * {t})"
-    )
-    mag = f"(1.0 - {poly} * exp(-({x}) * ({x})))"
-    return f"(CASE WHEN ({x}) < 0.0 THEN -{mag} ELSE {mag} END)"
 
 
 _DAILY_GRP_SQL = """
@@ -108,7 +97,7 @@ def _daily_grp(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM agg)
     SELECT nx AS n_weekend, ny AS n_weekday, w AS st_rank_sum,
            round(z, 4) AS z,
-           round(1.0 - {_erf_sql(f"(abs(z) / {_SQRT2!r})")}, 6)
+           round(1.0 - {erf_sql(f"(abs(z) / {_SQRT2!r})")}, 6)
              AS p_two_sided,
            abs(z) > {_Z95!r} AS reject_5pct
     FROM zz
@@ -164,7 +153,7 @@ def q_siegel_tukey(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("w").alias("st_rank_sum"),
         F.round(F.col("z"), 4).alias("z"),
         F.round(
-            1.0 - F.expr(_erf_sql(f"(abs(z) / {_SQRT2!r})")), 6
+            1.0 - F.expr(erf_sql(f"(abs(z) / {_SQRT2!r})")), 6
         ).alias("p_two_sided"),
         (F.abs(F.col("z")) > _Z95).alias("reject_5pct"),
     )
@@ -193,7 +182,7 @@ def q_siegel_tukey(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT nx AS n_weekend, ny AS n_weekday,
            round(CAST(m4 AS DOUBLE) / 4.0, 2) AS mood_m,
            round(z, 4) AS z,
-           round(1.0 - {_erf_sql(f"(abs(z) / {_SQRT2!r})")}, 6)
+           round(1.0 - {erf_sql(f"(abs(z) / {_SQRT2!r})")}, 6)
              AS p_two_sided,
            abs(z) > {_Z95!r} AS reject_5pct
     FROM zz
@@ -239,7 +228,7 @@ def q_mood_scale_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("m4").cast("double") / 4.0, 2).alias("mood_m"),
         F.round(F.col("z"), 4).alias("z"),
         F.round(
-            1.0 - F.expr(_erf_sql(f"(abs(z) / {_SQRT2!r})")), 6
+            1.0 - F.expr(erf_sql(f"(abs(z) / {_SQRT2!r})")), 6
         ).alias("p_two_sided"),
         (F.abs(F.col("z")) > _Z95).alias("reject_5pct"),
     )
@@ -270,7 +259,7 @@ def q_mood_scale_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT nx AS n_weekend, ny AS n_weekday, runs AS n_runs,
            round(er, 2) AS expected_runs,
            round(z, 4) AS z,
-           round(0.5 * (1.0 + {_erf_sql(f"(z / {_SQRT2!r})")}), 6)
+           round(0.5 * (1.0 + {erf_sql(f"(z / {_SQRT2!r})")}), 6)
              AS p_too_few_runs
     FROM zz
     """,
@@ -327,6 +316,6 @@ def q_wald_wolfowitz_runs2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("er"), 2).alias("expected_runs"),
         F.round(F.col("z"), 4).alias("z"),
         F.round(
-            0.5 * (1.0 + F.expr(_erf_sql(f"(z / {_SQRT2!r})"))), 6
+            0.5 * (1.0 + F.expr(erf_sql(f"(z / {_SQRT2!r})"))), 6
         ).alias("p_too_few_runs"),
     )

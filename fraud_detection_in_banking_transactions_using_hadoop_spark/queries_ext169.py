@@ -29,24 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fraud_detection_in_banking_transactions_using_hadoop_spark.functions.sqlmath import erf_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
 _SQRT2 = 1.4142135623730951
 _GQ_SPLIT = 25  # quantity <= 25 vs > 25
-
-_ERF_A = (0.254829592, -0.284496736, 1.421413741, -1.453152027, 1.061405429)
-
-
-def _erf_sql(x: str) -> str:
-    t = f"(1.0 / (1.0 + 0.3275911 * abs({x})))"
-    poly = (
-        f"((((({_ERF_A[4]!r} * {t} + {_ERF_A[3]!r}) * {t} + {_ERF_A[2]!r})"
-        f" * {t} + {_ERF_A[1]!r}) * {t} + {_ERF_A[0]!r}) * {t})"
-    )
-    mag = f"(1.0 - {poly} * exp(-({x}) * ({x})))"
-    return f"(CASE WHEN ({x}) < 0.0 THEN -{mag} ELSE {mag} END)"
 
 
 _MOM_SQL = """
@@ -301,7 +290,7 @@ def q_white_het_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(n0 AS BIGINT) AS n_low, CAST(n1 AS BIGINT) AS n_high,
            round(fstat, 6) AS variance_ratio_f,
            round(z, 4) AS z_lnf,
-           round(1.0 - {_erf_sql(f"(abs(z) / {_SQRT2!r})")}, 6)
+           round(1.0 - {erf_sql(f"(abs(z) / {_SQRT2!r})")}, 6)
              AS p_two_sided,
            abs(z) > 1.959963984540054 AS reject_5pct
     FROM st
@@ -364,7 +353,7 @@ def q_goldfeld_quandt(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("fstat"), 6).alias("variance_ratio_f"),
         F.round(F.col("z"), 4).alias("z_lnf"),
         F.round(
-            1.0 - F.expr(_erf_sql(f"(abs(z) / {_SQRT2!r})")), 6
+            1.0 - F.expr(erf_sql(f"(abs(z) / {_SQRT2!r})")), 6
         ).alias("p_two_sided"),
         (F.abs(F.col("z")) > 1.959963984540054).alias("reject_5pct"),
     )
@@ -404,7 +393,7 @@ def q_goldfeld_quandt(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(nd AS BIGINT) AS n_lines,
            round(ssr_lin / szz, 6) AS resid_share_linear,
            round(fstat, 4) AS f_reset,
-           round(1.0 - {_erf_sql(f"(sqrt(greatest(fstat, 0.0)) / {_SQRT2!r})")},
+           round(1.0 - {erf_sql(f"(sqrt(greatest(fstat, 0.0)) / {_SQRT2!r})")},
                  6) AS p_chi2_1,
            fstat > 3.841458820694124 AS reject_5pct
     FROM ftest
@@ -500,7 +489,7 @@ def q_ramsey_reset(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             1.0
             - F.expr(
-                _erf_sql(
+                erf_sql(
                     f"(sqrt(greatest(fstat, 0.0)) / {_SQRT2!r})"
                 )
             ),

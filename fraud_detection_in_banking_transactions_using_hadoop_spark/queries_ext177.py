@@ -20,24 +20,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fraud_detection_in_banking_transactions_using_hadoop_spark.functions.sqlmath import erf_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
 _SQRT2 = 1.4142135623730951
 _Z95 = 1.959963984540054
-
-_ERF_A = (0.254829592, -0.284496736, 1.421413741, -1.453152027, 1.061405429)
-
-
-def _erf_sql(x: str) -> str:
-    t = f"(1.0 / (1.0 + 0.3275911 * abs({x})))"
-    poly = (
-        f"((((({_ERF_A[4]!r} * {t} + {_ERF_A[3]!r}) * {t} + {_ERF_A[2]!r})"
-        f" * {t} + {_ERF_A[1]!r}) * {t} + {_ERF_A[0]!r}) * {t})"
-    )
-    mag = f"(1.0 - {poly} * exp(-({x}) * ({x})))"
-    return f"(CASE WHEN ({x}) < 0.0 THEN -{mag} ELSE {mag} END)"
 
 
 _DAILY_SQL = """
@@ -81,7 +70,7 @@ _DAILY_SQL = """
       FROM agg)
     SELECT n_seasons, s_tot AS s_pooled,
            round(z, 4) AS z,
-           round(1.0 - {_erf_sql(f"(abs(z) / {_SQRT2!r})")}, 6)
+           round(1.0 - {erf_sql(f"(abs(z) / {_SQRT2!r})")}, 6)
              AS p_two_sided,
            abs(z) > {_Z95!r} AS reject_5pct
     FROM st
@@ -142,7 +131,7 @@ def q_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s_tot").alias("s_pooled"),
         F.round(F.col("z"), 4).alias("z"),
         F.round(
-            1.0 - F.expr(_erf_sql(f"(abs(z) / {_SQRT2!r})")), 6
+            1.0 - F.expr(erf_sql(f"(abs(z) / {_SQRT2!r})")), 6
         ).alias("p_two_sided"),
         (F.abs(F.col("z")) > _Z95).alias("reject_5pct"),
     )
@@ -283,7 +272,7 @@ def q_cusumsq_variance_stability(
     SELECT n AS n_values, runs AS n_runs,
            round((2.0 * n - 1.0) / 3.0, 2) AS expected_runs,
            round(z, 4) AS z,
-           round(1.0 - {_erf_sql(f"(abs(z) / {_SQRT2!r})")}, 6)
+           round(1.0 - {erf_sql(f"(abs(z) / {_SQRT2!r})")}, 6)
              AS p_two_sided,
            abs(z) > {_Z95!r} AS reject_5pct
     FROM st
@@ -341,7 +330,7 @@ def q_runs_up_down_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round((2.0 * F.col("n") - 1.0) / 3.0, 2).alias("expected_runs"),
         F.round(F.col("z"), 4).alias("z"),
         F.round(
-            1.0 - F.expr(_erf_sql(f"(abs(z) / {_SQRT2!r})")), 6
+            1.0 - F.expr(erf_sql(f"(abs(z) / {_SQRT2!r})")), 6
         ).alias("p_two_sided"),
         (F.abs(F.col("z")) > _Z95).alias("reject_5pct"),
     )

@@ -79,15 +79,11 @@ def q_streaming_drawdown_replay(
     import tempfile
     from pathlib import Path
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="dd_stream_"))
     src, state = base / "src", base / "state"
     cents = F.round(F.col("value") * 100, 0).cast("bigint")
@@ -111,12 +107,6 @@ def q_streaming_drawdown_replay(
             str(src / f"part{p}")
         )
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "part*"))
-    )
-
     def fold(batch_df, batch_id):
         w = Window.partitionBy("user_id").orderBy("us", "event_id")
         wcum = w.rowsBetween(Window.unboundedPreceding, 0)
@@ -135,10 +125,23 @@ def q_streaming_drawdown_replay(
             .cast("bigint")
             .alias("bdd"),
         )
-        try:
-            recover_table(spark, str(state))
-            prev = spark.read.parquet(str(state))
-            merged = agg.join(prev, "user_id", "full_outer").select(
+
+        def advance(prev):
+            if prev is None:
+                return agg.select(
+                    "user_id",
+                    F.greatest(
+                        F.col("bdd"), F.lit(0) - F.col("minpref"), F.lit(0)
+                    )
+                    .cast("bigint")
+                    .alias("dd"),
+                    F.greatest(F.lit(0), F.col("maxpref"))
+                    .cast("bigint")
+                    .alias("runmax"),
+                    F.col("t").cast("bigint").alias("p"),
+                    F.col("m").cast("bigint").alias("seen"),
+                )
+            return agg.join(prev, "user_id", "full_outer").select(
                 "user_id",
                 F.when(F.col("m").isNull(), F.col("dd"))
                 .otherwise(
@@ -175,25 +178,10 @@ def q_streaming_drawdown_replay(
                 .cast("bigint")
                 .alias("seen"),
             )
-            atomic_overwrite(merged, str(state), f"dd{batch_id}")
-        except Exception:
-            first = agg.select(
-                "user_id",
-                F.greatest(
-                    F.col("bdd"), F.lit(0) - F.col("minpref"), F.lit(0)
-                )
-                .cast("bigint")
-                .alias("dd"),
-                F.greatest(F.lit(0), F.col("maxpref"))
-                .cast("bigint")
-                .alias("runmax"),
-                F.col("t").cast("bigint").alias("p"),
-                F.col("m").cast("bigint").alias("seen"),
-            )
-            first.write.mode("overwrite").parquet(str(state))
 
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
+        fold_state(spark, str(state), advance, f"dd{batch_id}")
+
+    replay_files(spark, str(src / "part*"), ev.schema, fold)
 
     final = spark.read.parquet(str(state))
     return final.select(

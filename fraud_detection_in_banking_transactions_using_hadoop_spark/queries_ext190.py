@@ -86,15 +86,11 @@ def q_streaming_lindley_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     from pathlib import Path
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="lindley_stream_"))
     src, state = base / "src", base / "state"
     ev = read_table(spark, sf_dir, "events").select(
@@ -109,12 +105,6 @@ def q_streaming_lindley_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         parts.where(F.col("pt") == p).drop("pt").coalesce(1).write.parquet(
             str(src / f"part{p}")
         )
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "part*"))
-    )
 
     def fold(batch_df, batch_id):
         w = Window.partitionBy("day").orderBy("us", "event_id")
@@ -162,9 +152,26 @@ def q_streaming_lindley_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("us").cast("bigint").alias("batch_last_us"),
         )
         agg = bounds.join(quad, "day", "left")
-        try:
-            recover_table(spark, str(state))
-            prev = spark.read.parquet(str(state))
+
+        def advance(prev):
+            if prev is None:
+                return agg.select(
+                    "day",
+                    F.greatest(
+                        F.lit(0).cast("bigint"),
+                        F.coalesce(F.col("maxsuffix"), F.lit(0)),
+                    )
+                    .cast("bigint")
+                    .alias("w"),
+                    F.greatest(
+                        F.lit(0).cast("bigint"),
+                        F.coalesce(F.col("kad"), F.lit(0)),
+                    )
+                    .cast("bigint")
+                    .alias("peak"),
+                    F.col("batch_last_us").cast("bigint").alias("last_us"),
+                    F.col("m").cast("bigint").alias("seen"),
+                )
             joined = agg.join(prev, "day", "full_outer")
             # boundary wait: the first batch row of a day already in
             # state gets its increment stitched from state.last_us;
@@ -180,7 +187,7 @@ def q_streaming_lindley_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ),
                 ),
             ).otherwise(F.lit(0))
-            merged = joined.select(
+            return joined.select(
                 "day",
                 F.when(F.col("m").isNull(), F.col("w"))
                 .otherwise(
@@ -214,29 +221,10 @@ def q_streaming_lindley_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint")
                 .alias("seen"),
             )
-            atomic_overwrite(merged, str(state), f"lindley{batch_id}")
-        except Exception:
-            first = agg.select(
-                "day",
-                F.greatest(
-                    F.lit(0).cast("bigint"),
-                    F.coalesce(F.col("maxsuffix"), F.lit(0)),
-                )
-                .cast("bigint")
-                .alias("w"),
-                F.greatest(
-                    F.lit(0).cast("bigint"),
-                    F.coalesce(F.col("kad"), F.lit(0)),
-                )
-                .cast("bigint")
-                .alias("peak"),
-                F.col("batch_last_us").cast("bigint").alias("last_us"),
-                F.col("m").cast("bigint").alias("seen"),
-            )
-            first.write.mode("overwrite").parquet(str(state))
 
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
+        fold_state(spark, str(state), advance, f"lindley{batch_id}")
+
+    replay_files(spark, str(src / "part*"), ev.schema, fold)
 
     final = spark.read.parquet(str(state))
     return final.agg(

@@ -84,15 +84,11 @@ def q_streaming_kalman_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     from pathlib import Path
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="kalman_stream_"))
     src, state = base / "src", base / "state"
     ev = (
@@ -113,12 +109,6 @@ def q_streaming_kalman_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             str(src / f"part{p}")
         )
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "part*"))
-    )
-
     def fold(batch_df, batch_id):
         arrs = batch_df.groupBy("user_id").agg(
             F.expr(
@@ -127,10 +117,26 @@ def q_streaming_kalman_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("ys"),
             F.count(F.lit(1)).cast("bigint").alias("m"),
         )
-        try:
-            recover_table(spark, str(state))
-            prev = spark.read.parquet(str(state))
-            merged = (
+
+        def advance(prev):
+            if prev is None:
+                return arrs.select(
+                    "user_id",
+                    F.expr(
+                        "aggregate(slice(ys, 2, cast(m AS INT) - 1),"
+                        f" named_struct('x', ys[0], 'p', CAST({_KR!r} AS DOUBLE),"
+                        "   'k', CAST(0.0 AS DOUBLE)),"
+                        f" {_STEP})"
+                    ).alias("st"),
+                    F.col("m").cast("bigint").alias("seen"),
+                ).select(
+                    "user_id",
+                    F.col("st.x").alias("x"),
+                    F.col("st.p").alias("p"),
+                    F.col("st.k").alias("k"),
+                    "seen",
+                )
+            return (
                 arrs.join(prev, "user_id", "full_outer")
                 .select(
                     "user_id",
@@ -162,28 +168,10 @@ def q_streaming_kalman_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "seen",
                 )
             )
-            atomic_overwrite(merged, str(state), f"kalman{batch_id}")
-        except Exception:
-            first = arrs.select(
-                "user_id",
-                F.expr(
-                    "aggregate(slice(ys, 2, cast(m AS INT) - 1),"
-                    f" named_struct('x', ys[0], 'p', CAST({_KR!r} AS DOUBLE),"
-                    "   'k', CAST(0.0 AS DOUBLE)),"
-                    f" {_STEP})"
-                ).alias("st"),
-                F.col("m").cast("bigint").alias("seen"),
-            ).select(
-                "user_id",
-                F.col("st.x").alias("x"),
-                F.col("st.p").alias("p"),
-                F.col("st.k").alias("k"),
-                "seen",
-            )
-            first.write.mode("overwrite").parquet(str(state))
 
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
+        fold_state(spark, str(state), advance, f"kalman{batch_id}")
+
+    replay_files(spark, str(src / "part*"), ev.schema, fold)
 
     final = spark.read.parquet(str(state))
     return final.select(

@@ -174,16 +174,12 @@ def q_streaming_misra_gries_replay(
 
     import pandas as pd
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
     from pyspark.sql import Window
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="mg_stream_"))
     src, state = base / "src", base / "state"
     ev = _purchases(spark, sf_dir)
@@ -194,12 +190,6 @@ def q_streaming_misra_gries_replay(
         parts.where(F.col("pt") == p).drop("pt").coalesce(1).write.parquet(
             str(src / f"part{p}")
         )
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "part*"))
-    )
 
     state_schema = "day STRING, counters STRING, n LONG"
 
@@ -229,9 +219,13 @@ def q_streaming_misra_gries_replay(
             F.lit(None).cast("string").alias("counters"),
             F.lit(None).cast("long").alias("n"),
         )
-        try:
-            recover_table(spark, str(state))
-            prev = spark.read.parquet(str(state)).select(
+
+        def advance(prev):
+            if prev is None:
+                return b.groupBy("day").applyInPandas(
+                    seed_and_fold, schema=state_schema
+                )
+            prev = prev.select(
                 "day",
                 F.lit(None).cast("long").alias("us"),
                 F.lit(None).cast("long").alias("event_id"),
@@ -240,19 +234,13 @@ def q_streaming_misra_gries_replay(
                 "counters",
                 "n",
             )
-            b = b.unionByName(prev)
-            merged = b.groupBy("day").applyInPandas(
+            return b.unionByName(prev).groupBy("day").applyInPandas(
                 seed_and_fold, schema=state_schema
             )
-            atomic_overwrite(merged, str(state), f"mg{batch_id}")
-        except Exception:
-            first = b.groupBy("day").applyInPandas(
-                seed_and_fold, schema=state_schema
-            )
-            first.write.mode("overwrite").parquet(str(state))
 
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
+        fold_state(spark, str(state), advance, f"mg{batch_id}")
+
+    replay_files(spark, str(src / "part*"), ev.schema, fold)
 
     def emit(pdf):
         rows = []

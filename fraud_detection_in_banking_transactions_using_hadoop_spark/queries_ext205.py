@@ -21,8 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fraud_detection_in_banking_transactions_using_hadoop_spark.functions.sqlmath import erf_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext141 import _erf_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _DEC = "decimal(38,0)"
@@ -40,7 +40,7 @@ def _probit_terms(vp: str, bp: str) -> dict[str, str]:
     eta = f"({bp}b0 + {bp}b1 * {x})"
     phi = f"({_INV_SQRT2PI} * exp(-0.5 * {eta} * {eta}))"
     big_phi = (
-        f"least(greatest(0.5 * (1.0 + {_erf_sql(f'{eta} * {_INV_SQRT2}')}),"
+        f"least(greatest(0.5 * (1.0 + {erf_sql(f'{eta} * {_INV_SQRT2}')}),"
         f" 1e-10), 1.0 - 1e-10)"
     )
     u = f"({phi} * (CAST({vp}y AS DOUBLE) - {big_phi})" \

@@ -182,16 +182,12 @@ def q_streaming_lz78_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
     from pyspark.sql import Window
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="lz78_stream_"))
     src, state = base / "src", base / "state"
     ev = _events_chars(spark, sf_dir)
@@ -203,11 +199,6 @@ def q_streaming_lz78_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             str(src / f"part{p}")
         )
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "part*"))
-    )
     state_schema = "day STRING, dict STRING, cur STRING, n LONG"
 
     def fold(batch_df, batch_id):
@@ -236,9 +227,13 @@ def q_streaming_lz78_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast("string").alias("cur"),
             F.lit(None).cast("long").alias("n"),
         )
-        try:
-            recover_table(spark, str(state))
-            prev = spark.read.parquet(str(state)).select(
+
+        def advance(prev):
+            if prev is None:
+                return b.groupBy("day").applyInPandas(
+                    seed_and_fold, schema=state_schema
+                )
+            prev = prev.select(
                 "day",
                 F.lit(None).cast("long").alias("us"),
                 F.lit(None).cast("long").alias("event_id"),
@@ -248,19 +243,13 @@ def q_streaming_lz78_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cur",
                 "n",
             )
-            b = b.unionByName(prev)
-            merged = b.groupBy("day").applyInPandas(
+            return b.unionByName(prev).groupBy("day").applyInPandas(
                 seed_and_fold, schema=state_schema
             )
-            atomic_overwrite(merged, str(state), f"lz{batch_id}")
-        except Exception:
-            first = b.groupBy("day").applyInPandas(
-                seed_and_fold, schema=state_schema
-            )
-            first.write.mode("overwrite").parquet(str(state))
 
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
+        fold_state(spark, str(state), advance, f"lz{batch_id}")
+
+    replay_files(spark, str(src / "part*"), ev.schema, fold)
 
     def emit(pdf):
         rows = [

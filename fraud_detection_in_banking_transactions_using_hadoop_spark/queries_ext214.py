@@ -188,15 +188,11 @@ def q_streaming_bottomk_quantile_replay(
     import tempfile
     from pathlib import Path
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="bkq_stream_"))
     src, state = base / "src", base / "state"
     ev = read_table(spark, sf_dir, "events").select(
@@ -217,41 +213,29 @@ def q_streaming_bottomk_quantile_replay(
             str(src / f"part{p}")
         )
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "part*"))
-    )
-
     def fold(batch_df, batch_id):
         batch = batch_df.select("h", "event_id", "cents")
         n_batch = batch.count()
-        try:
-            recover_table(spark, str(state))
-            prev = spark.read.parquet(str(state))
+
+        def advance(prev):
+            if prev is None:
+                return (
+                    batch.orderBy("h", "event_id")
+                    .limit(_KS)
+                    .withColumn("n_seen", F.lit(n_batch).cast("bigint"))
+                )
             n0 = prev.agg(F.max("n_seen")).collect()[0][0] or 0
-            merged = (
+            return (
                 prev.select("h", "event_id", "cents")
                 .unionByName(batch)
                 .orderBy("h", "event_id")
                 .limit(_KS)
                 .withColumn("n_seen", F.lit(n0 + n_batch).cast("bigint"))
             )
-            atomic_overwrite(merged, str(state), f"bkq{batch_id}")
-        except Exception:
-            first = (
-                batch.orderBy("h", "event_id")
-                .limit(_KS)
-                .withColumn("n_seen", F.lit(n_batch).cast("bigint"))
-            )
-            first.write.mode("overwrite").parquet(str(state))
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        fold_state(spark, str(state), advance, f"bkq{batch_id}")
+
+    replay_files(spark, str(src / "part*"), ev.schema, fold)
 
     fin = spark.read.parquet(str(state)).localCheckpoint(eager=True)
     ranked = fin.select(

@@ -281,16 +281,12 @@ def q_streaming_dgim_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
     from pyspark.sql import Window
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="dgim_stream_"))
     src, state = base / "src", base / "state"
     ev = _events_bits(spark, sf_dir)
@@ -301,12 +297,6 @@ def q_streaming_dgim_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         parts.where(F.col("pt") == p).drop("pt").coalesce(1).write.parquet(
             str(src / f"part{p}")
         )
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "part*"))
-    )
 
     state_schema = "day STRING, buckets STRING, n LONG"
 
@@ -333,9 +323,13 @@ def q_streaming_dgim_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast("string").alias("buckets"),
             F.lit(None).cast("long").alias("n"),
         )
-        try:
-            recover_table(spark, str(state))
-            prev = spark.read.parquet(str(state)).select(
+
+        def advance(prev):
+            if prev is None:
+                return b.groupBy("day").applyInPandas(
+                    seed_and_fold, schema=state_schema
+                )
+            prev = prev.select(
                 "day",
                 F.lit(None).cast("long").alias("us"),
                 F.lit(None).cast("long").alias("event_id"),
@@ -344,22 +338,13 @@ def q_streaming_dgim_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "buckets",
                 "n",
             )
-            merged = b.unionByName(prev).groupBy("day").applyInPandas(
+            return b.unionByName(prev).groupBy("day").applyInPandas(
                 seed_and_fold, schema=state_schema
             )
-            atomic_overwrite(merged, str(state), f"dgim{batch_id}")
-        except Exception:
-            first = b.groupBy("day").applyInPandas(
-                seed_and_fold, schema=state_schema
-            )
-            first.write.mode("overwrite").parquet(str(state))
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        fold_state(spark, str(state), advance, f"dgim{batch_id}")
+
+    replay_files(spark, str(src / "part*"), ev.schema, fold)
 
     true_df = (
         ev.select(

@@ -71,15 +71,11 @@ def q_streaming_transition_replay(
     import tempfile
     from pathlib import Path
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="trans_stream_"))
     src, last_state, cnt_state = (
         base / "src",
@@ -97,12 +93,6 @@ def q_streaming_transition_replay(
         parts.where(F.col("pt") == p).drop("pt").coalesce(1).write.parquet(
             str(src / f"part{p}")
         )
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "part*"))
-    )
 
     # Per-batch fold, entirely JVM-side (r12: the r11 CRC-replay lesson
     # applied -- the old per-user applyInPandas stitch paid Python
@@ -137,54 +127,44 @@ def q_streaming_transition_replay(
                 "last_type"
             ),
         ).localCheckpoint(eager=True)
-        try:
-            recover_table(spark, str(last_state))
-            prev_last = spark.read.parquet(str(last_state))
-            have_state = True
-        except Exception:
-            have_state = False
-        if have_state:
-            boundary = (
-                F.broadcast(
-                    prev_last.withColumnRenamed("last_type", "prev_type")
-                )
-                .join(ends.select("user_id", "first_type"), "user_id")
-                .groupBy(
-                    F.col("prev_type").alias("from_type"),
-                    F.col("first_type").alias("to_type"),
-                )
-                .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-            )
-            new_cnt = within.unionByName(boundary)
-            try:
-                recover_table(spark, str(cnt_state))
-                new_cnt = new_cnt.unionByName(
-                    spark.read.parquet(str(cnt_state))
-                )
-            except Exception:
-                pass
-            new_cnt = new_cnt.groupBy("from_type", "to_type").agg(
-                F.sum("n").cast("bigint").alias("n")
-            )
-            new_last = ends.select("user_id", "last_type").unionByName(
-                prev_last.join(
-                    ends.select("user_id"), "user_id", "left_anti"
-                )
-            )
-            atomic_overwrite(new_cnt, str(cnt_state), f"tc{batch_id}")
-            atomic_overwrite(new_last, str(last_state), f"tl{batch_id}")
-        else:
-            within.write.mode("overwrite").parquet(str(cnt_state))
-            ends.select("user_id", "last_type").write.mode(
-                "overwrite"
-            ).parquet(str(last_state))
+        starts = ends.select("user_id", "first_type")
+        lasts = ends.select("user_id", "last_type")
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        # The count fold runs inside the last-event fold, so it sees the
+        # previous last-event state before that table is swapped. With
+        # no last-event state this is the first batch: counts restart.
+        def advance_last(prev_last):
+            def advance_cnt(prev_cnt):
+                if prev_last is None:
+                    return within
+                boundary = (
+                    F.broadcast(
+                        prev_last.withColumnRenamed("last_type", "prev_type")
+                    )
+                    .join(starts, "user_id")
+                    .groupBy(
+                        F.col("prev_type").alias("from_type"),
+                        F.col("first_type").alias("to_type"),
+                    )
+                    .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+                )
+                new_cnt = within.unionByName(boundary)
+                if prev_cnt is not None:
+                    new_cnt = new_cnt.unionByName(prev_cnt)
+                return new_cnt.groupBy("from_type", "to_type").agg(
+                    F.sum("n").cast("bigint").alias("n")
+                )
+
+            fold_state(spark, str(cnt_state), advance_cnt, f"tc{batch_id}")
+            if prev_last is None:
+                return lasts
+            return lasts.unionByName(
+                prev_last.join(starts.select("user_id"), "user_id", "left_anti")
+            )
+
+        fold_state(spark, str(last_state), advance_last, f"tl{batch_id}")
+
+    replay_files(spark, str(src / "part*"), ev.schema, fold)
 
     cnt = spark.read.parquet(str(cnt_state))
     w = Window.partitionBy("from_type")

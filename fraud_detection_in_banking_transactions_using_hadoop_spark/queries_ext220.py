@@ -23,10 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext147 import (
-    _MD5_HEX_SQL,
-    _md5_media,
-)
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext147 import _MD5_HEX_SQL
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext172 import _md5_media
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _W, _H = 4, 5  # 20 pixels from the 60 deterministic md5 bytes

@@ -23,7 +23,7 @@ Mokken/Loevinger scalability.
   protection levels y_j = mu_bar + z * sigma_bar with z =
   PhiInv(1 - f_{j+1} / f_bar), classes = order priorities with exact
   integer fares/demand moments, PhiInv = the repo's shared Acklam
-  text (queries_ext120._acklam_sql).
+  text (functions.sqlmath.acklam_sql).
 - mokken_loevinger_h: scalogram quality of the 5 event-type "items"
   over users: per item pair, H_ij = 1 - F/E with F = observed Guttman
   errors (did the rare item, skipped the common one) and E the
@@ -37,9 +37,9 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fraud_detection_in_banking_transactions_using_hadoop_spark.functions.sqlmath import acklam_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.fold import collect_nonempty
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
-from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext120 import _acklam_sql
 from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
 
 _ELO_K = 32.0
@@ -367,7 +367,7 @@ def q_bowtie_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(cum_mu, 6) AS agg_mean_daily,
            round(p, 6) + 0.0 AS critical_p,
            CASE WHEN p <= 0.0 OR p >= 1.0 THEN NULL
-                ELSE round(cum_mu + ({_acklam_sql('p')}) * sqrt(cum_var),
+                ELSE round(cum_mu + ({acklam_sql('p')}) * sqrt(cum_var),
                            6) + 0.0
            END AS protection_level
     FROM z
@@ -473,7 +473,7 @@ def q_emsr_b_protection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     prot = F.expr(
         f"CASE WHEN p <= 0.0 OR p >= 1.0 THEN NULL"
-        f" ELSE round(cum_mu + ({_acklam_sql('p')}) * sqrt(cum_var), 6)"
+        f" ELSE round(cum_mu + ({acklam_sql('p')}) * sqrt(cum_var), 6)"
         f" + 0.0 END"
     )
     return z.select(

@@ -101,14 +101,11 @@ def q_streaming_elo_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     from pathlib import Path
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="elo_stream_"))
     src, state = base / "src", base / "state"
     feed = _game_feed(spark, sf_dir)
@@ -123,37 +120,25 @@ def q_streaming_elo_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             str(src / f"part{p}")
         )
 
-    stream = (
-        spark.readStream.schema(feed.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "part*"))
-    )
-
     def fold(batch_df, batch_id):
         games = [
             (g["m"], g["i"], g["j"], g["s"])
             for g in batch_df.orderBy("m", "i", "j").collect()
         ]
-        try:
-            recover_table(spark, str(state))
-            st = json.loads(
-                spark.read.parquet(str(state)).first()["payload"]
-            )
-            r, mp, dp = st["r"], st["mp"], st["dp"]
-        except Exception:
-            r, mp, dp = [_ELO_INIT] * 25, None, [0] * 25
-        r, mp, dp = elo_stitch(r, mp, dp, games)
-        payload = json.dumps({"r": r, "mp": mp, "dp": dp})
-        spark.createDataFrame(
-            [(payload,)], "payload string"
-        ).write.mode("overwrite").parquet(str(state))
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        def advance(prev):
+            if prev is None:
+                r, mp, dp = [_ELO_INIT] * 25, None, [0] * 25
+            else:
+                st = json.loads(prev.first()["payload"])
+                r, mp, dp = st["r"], st["mp"], st["dp"]
+            r, mp, dp = elo_stitch(r, mp, dp, games)
+            payload = json.dumps({"r": r, "mp": mp, "dp": dp})
+            return spark.createDataFrame([(payload,)], "payload string")
+
+        fold_state(spark, str(state), advance, f"elo{batch_id}")
+
+    replay_files(spark, str(src / "part*"), feed.schema, fold)
 
     st = json.loads(spark.read.parquet(str(state)).first()["payload"])
     r = [st["r"][n] + st["dp"][n] for n in range(25)]  # flush pending

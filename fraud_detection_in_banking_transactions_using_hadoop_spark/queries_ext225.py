@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fraud_detection_in_banking_transactions_using_hadoop_spark.queries import register
-from fraud_detection_in_banking_transactions_using_hadoop_spark.sources.readers import read_table
+from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext135 import _daily_indexed
 
 _RQA_LMIN = 2
 
@@ -47,19 +47,6 @@ _DAILY_CENTS_SQL = """
       SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS rn, cents
       FROM daily)
 """
-
-
-def _daily_rn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = read_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-        .cast("bigint")
-        .alias("cents")
-    )
-    return daily.select(
-        F.row_number().over(Window.orderBy("d")).cast("bigint").alias("rn"),
-        "cents",
-    )
 
 
 @register(
@@ -112,7 +99,7 @@ def q_rqa_recurrence_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RQA over daily revenue (module docstring): exact integer radius,
     islands-per-diagonal run detection, ppm shares via integer
     division -- every output hash-exact."""
-    s = _daily_rn(spark, sf_dir).localCheckpoint(eager=True)
+    s = _daily_indexed(spark, sf_dir).localCheckpoint(eager=True)
     mom = s.agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
         F.sum(F.col("cents").cast("decimal(38,0)")).alias("sx"),
@@ -226,7 +213,7 @@ def q_horizontal_visibility_graph(
     """HVG degree distribution (module docstring): the visibility test
     is ONE partitioned running max over the pair frame; exact ppm
     shares vs the exact-rational iid law."""
-    s = _daily_rn(spark, sf_dir).localCheckpoint(eager=True)
+    s = _daily_indexed(spark, sf_dir).localCheckpoint(eager=True)
     a = s.select(F.col("rn").alias("i"), F.col("cents").alias("yi"))
     b = s.select(F.col("rn").alias("j"), F.col("cents").alias("yj"))
     pairs = a.join(F.broadcast(b), F.col("i") < F.col("j")).select(

@@ -519,15 +519,11 @@ def q_streaming_crc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="crc_stream_"))
     src, state = base / "src", base / "state"
     docs = read_table(spark, sf_dir, "documents")
@@ -557,12 +553,6 @@ def q_streaming_crc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             1
         ).write.parquet(str(src / f"part{p + 1}"))
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "part*"))
-    )
-
     state_schema = "media_id long, crc long, n long"
 
     def fold(batch_df, batch_id):
@@ -591,27 +581,20 @@ def q_streaming_crc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ns.append(n0 + len(data))
                 yield pd.DataFrame({"media_id": ids, "crc": crcs, "n": ns})
 
-        try:
-            recover_table(spark, str(state))
-            prev = spark.read.parquet(str(state))
-            merged = bb.join(prev, "media_id", "left").mapInPandas(
+        def advance(prev):
+            if prev is None:
+                return (
+                    bb.withColumn("crc", F.lit(None).cast("long"))
+                    .withColumn("n", F.lit(None).cast("long"))
+                    .mapInPandas(upd, schema=state_schema)
+                )
+            return bb.join(prev, "media_id", "left").mapInPandas(
                 upd, schema=state_schema
             )
-            atomic_overwrite(merged, str(state), f"crc{batch_id}")
-        except Exception:
-            first = (
-                bb.withColumn("crc", F.lit(None).cast("long"))
-                .withColumn("n", F.lit(None).cast("long"))
-                .mapInPandas(upd, schema=state_schema)
-            )
-            first.write.mode("overwrite").parquet(str(state))
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        fold_state(spark, str(state), advance, f"crc{batch_id}")
+
+    replay_files(spark, str(src / "part*"), ev.schema, fold)
 
     return spark.read.parquet(str(state)).select(
         "media_id",

@@ -186,16 +186,12 @@ def q_streaming_pcsa_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     from pathlib import Path
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
     from pyspark.sql import Window
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="pcsa_stream_"))
     src, state = base / "src", base / "state"
     ev = read_table(spark, sf_dir, "events").select(
@@ -211,12 +207,6 @@ def q_streaming_pcsa_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         parts.where(F.col("pt") == p).drop("pt").coalesce(1).write.parquet(
             str(src / f"part{p}")
         )
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "part*"))
-    )
 
     def fold(batch_df, batch_id):
         regs = (
@@ -241,24 +231,19 @@ def q_streaming_pcsa_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("reg")
             )
         )
-        try:
-            recover_table(spark, str(state))
-            prev = spark.read.parquet(str(state))
-            merged = (
+
+        def advance(prev):
+            if prev is None:
+                return regs
+            return (
                 regs.unionByName(prev)
                 .groupBy("day", "bucket")
                 .agg(F.expr("bit_or(reg)").alias("reg"))
             )
-            atomic_overwrite(merged, str(state), f"pcsa{batch_id}")
-        except Exception:
-            regs.write.mode("overwrite").parquet(str(state))
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        fold_state(spark, str(state), advance, f"pcsa{batch_id}")
+
+    replay_files(spark, str(src / "part*"), ev.schema, fold)
 
     final_regs = spark.read.parquet(str(state))
     return _emit_from_regs(spark, sf_dir, final_regs)

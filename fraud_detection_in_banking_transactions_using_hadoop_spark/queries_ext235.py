@@ -160,16 +160,12 @@ def q_streaming_mmd_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     from pathlib import Path
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
     from pyspark.sql import Window
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="mmd_stream_"))
     src, state = base / "src", base / "state"
     ev = read_table(spark, sf_dir, "events").select(
@@ -186,18 +182,13 @@ def q_streaming_mmd_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             str(src / f"part{p}")
         )
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "part*"))
-    )
-
     def fold(batch_df, batch_id):
         mom = _moments(batch_df.select("grp", "d"))
-        try:
-            recover_table(spark, str(state))
-            prev = spark.read.parquet(str(state))
-            merged = (
+
+        def advance(prev):
+            if prev is None:
+                return mom
+            return (
                 mom.unionByName(prev)
                 .groupBy("grp")
                 .agg(
@@ -207,15 +198,9 @@ def q_streaming_mmd_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.sum("s3").cast("decimal(38,0)").alias("s3"),
                 )
             )
-            atomic_overwrite(merged, str(state), f"mmd{batch_id}")
-        except Exception:
-            mom.write.mode("overwrite").parquet(str(state))
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        fold_state(spark, str(state), advance, f"mmd{batch_id}")
+
+    replay_files(spark, str(src / "part*"), ev.schema, fold)
 
     return _emit_from_moments(spark.read.parquet(str(state)))

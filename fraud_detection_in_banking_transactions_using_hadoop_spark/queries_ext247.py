@@ -59,16 +59,12 @@ def q_streaming_lru_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
     from pyspark.sql import Window
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="lru_stream_"))
     src, state = base / "src", base / "state"
     ev = read_table_events(spark, sf_dir)
@@ -79,12 +75,6 @@ def q_streaming_lru_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         parts.where(F.col("pt") == p).drop("pt").coalesce(1).write.parquet(
             str(src / f"part{p}")
         )
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "part*"))
-    )
 
     state_schema = "day STRING, cache STRING, hits LONG, npos LONG"
 
@@ -125,9 +115,13 @@ def q_streaming_lru_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast("long").alias("hits"),
             F.lit(None).cast("long").alias("npos"),
         )
-        try:
-            recover_table(spark, str(state))
-            prev = spark.read.parquet(str(state)).select(
+
+        def advance(prev):
+            if prev is None:
+                return b.groupBy("day").applyInPandas(
+                    seed_and_fold, schema=state_schema
+                )
+            prev = prev.select(
                 "day",
                 F.lit(None).cast("int").alias("rn"),
                 F.lit(None).cast("long").alias("pg"),
@@ -136,22 +130,13 @@ def q_streaming_lru_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "hits",
                 "npos",
             )
-            merged = b.unionByName(prev).groupBy("day").applyInPandas(
+            return b.unionByName(prev).groupBy("day").applyInPandas(
                 seed_and_fold, schema=state_schema
             )
-            atomic_overwrite(merged, str(state), f"lru{batch_id}")
-        except Exception:
-            first = b.groupBy("day").applyInPandas(
-                seed_and_fold, schema=state_schema
-            )
-            first.write.mode("overwrite").parquet(str(state))
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        fold_state(spark, str(state), advance, f"lru{batch_id}")
+
+    replay_files(spark, str(src / "part*"), ev.schema, fold)
 
     fin = spark.read.parquet(str(state))
 

@@ -501,14 +501,11 @@ def q_streaming_ucb1_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     from pathlib import Path
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="ucb1_stream_"))
     src, state = base / "src", base / "state"
     feed = _daily_rewards(spark, sf_dir)
@@ -520,36 +517,21 @@ def q_streaming_ucb1_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             str(src / f"part{p}")
         )
 
-    stream = (
-        spark.readStream.schema(feed.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "part*"))
-    )
-
     def fold(batch_df, batch_id):
         rows = batch_df.orderBy("day").collect()
         rewards = [
             (str(r["day"]), [int(r[f"r{i}"]) for i in range(5)])
             for r in rows
         ]
-        try:
-            recover_table(spark, str(state))
-            st = json.loads(
-                spark.read.parquet(str(state)).first()["payload"]
-            )
-        except Exception:
-            st = None
-        st = ucb1_fold(rewards, state=st)
-        spark.createDataFrame(
-            [(json.dumps(st),)], "payload string"
-        ).write.mode("overwrite").parquet(str(state))
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        def advance(prev):
+            st = None if prev is None else json.loads(prev.first()["payload"])
+            st = ucb1_fold(rewards, state=st)
+            return spark.createDataFrame([(json.dumps(st),)], "payload string")
+
+        fold_state(spark, str(state), advance, f"ucb1{batch_id}")
+
+    replay_files(spark, str(src / "part*"), feed.schema, fold)
 
     st = json.loads(spark.read.parquet(str(state)).first()["payload"])
     return _ucb1_emit(spark, st)

@@ -182,17 +182,14 @@ def q_streaming_forward_replay(
 
     from pyspark.sql import Window
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        recover_table,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
     from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext187 import (
         _V_DAYS,
     )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
-    )
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="fwd_stream_"))
     src, state = base / "src", base / "state"
     daily = (
@@ -227,63 +224,48 @@ def q_streaming_forward_replay(
             str(src / f"part{p}")
         )
 
-    stream = (
-        spark.readStream.schema(feed.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "part*"))
-    )
-
     def fold(batch_df, batch_id):
         signs = [
             int(r["s"]) for r in batch_df.orderBy("d").collect()
         ]
-        try:
-            recover_table(spark, str(state))
-            st = json.loads(
-                spark.read.parquet(str(state)).first()["payload"]
-            )
-        except Exception:
-            st = None
         if not signs:
             return
-        if st is None:
-            ll, a0, a1, bsum, n = hmm_forward_fold(signs)
-        else:
-            # resume the recursion from the carried alphas exactly
-            a0, a1 = st["a0"], st["a1"]
-            ll, bsum, n = st["ll"], st["bsum"], st["n"]
-            from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext258 import (
-                _E0_DN,
-                _E0_UP,
-                _E1_DN,
-                _E1_UP,
-                _T_STAY,
-                _T_SWITCH,
+
+        def advance(prev):
+            if prev is None:
+                ll, a0, a1, bsum, n = hmm_forward_fold(signs)
+            else:
+                # resume the recursion from the carried alphas exactly
+                st = json.loads(prev.first()["payload"])
+                a0, a1 = st["a0"], st["a1"]
+                ll, bsum, n = st["ll"], st["bsum"], st["n"]
+                from fraud_detection_in_banking_transactions_using_hadoop_spark.queries_ext258 import (
+                    _E0_DN,
+                    _E0_UP,
+                    _E1_DN,
+                    _E1_UP,
+                    _T_STAY,
+                    _T_SWITCH,
+                )
+
+                for s in signs:
+                    e0 = _E0_UP if s == 1 else _E0_DN
+                    e1 = _E1_UP if s == 1 else _E1_DN
+                    n0 = (a0 * _T_STAY + a1 * _T_SWITCH) * e0
+                    n1 = (a0 * _T_SWITCH + a1 * _T_STAY) * e1
+                    c = n0 + n1
+                    a0, a1 = n0 / c, n1 / c
+                    ll = ll + math.log(c)
+                    bsum += int(math.floor(a1 * 1e9 + 0.5))
+                    n += 1
+            payload = json.dumps(
+                {"a0": a0, "a1": a1, "ll": ll, "bsum": bsum, "n": n}
             )
+            return spark.createDataFrame([(payload,)], "payload string")
 
-            for s in signs:
-                e0 = _E0_UP if s == 1 else _E0_DN
-                e1 = _E1_UP if s == 1 else _E1_DN
-                n0 = (a0 * _T_STAY + a1 * _T_SWITCH) * e0
-                n1 = (a0 * _T_SWITCH + a1 * _T_STAY) * e1
-                c = n0 + n1
-                a0, a1 = n0 / c, n1 / c
-                ll = ll + math.log(c)
-                bsum += int(math.floor(a1 * 1e9 + 0.5))
-                n += 1
-        payload = json.dumps(
-            {"a0": a0, "a1": a1, "ll": ll, "bsum": bsum, "n": n}
-        )
-        spark.createDataFrame(
-            [(payload,)], "payload string"
-        ).write.mode("overwrite").parquet(str(state))
+        fold_state(spark, str(state), advance, f"fwd{batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    replay_files(spark, str(src / "part*"), feed.schema, fold)
 
     st = json.loads(spark.read.parquet(str(state)).first()["payload"])
     n_up = int(

@@ -122,17 +122,14 @@ def q_streaming_mdct_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import numpy as np
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        recover_table,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
     from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.multimodal import (
         decode_mdct,
     )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
-    )
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="mdct_stream_"))
     src, state_dir = base / "src", base / "state"
 
@@ -169,48 +166,33 @@ def q_streaming_mdct_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             1
         ).write.parquet(str(src / f"part{p}"))
 
-    stream = (
-        spark.readStream.schema(feed.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "part*"))
-    )
-
     def fold(batch_df, batch_id):
         # Arrow transfer, not .collect(): 50k Row objects per batch cost
         # ~10x the raw ints (the r11 CRC-replay lesson)
         pdf = batch_df.orderBy("media_id", "k").toPandas()
-        try:
-            recover_table(spark, str(state_dir))
-            states = {
-                int(m): st
-                for m, st in json.loads(
-                    spark.read.parquet(str(state_dir)).first()["payload"]
-                ).items()
-            }
-        except Exception:
-            states = {}
         per: dict = {}
         for mid, k, sv in zip(pdf["media_id"], pdf["k"], pdf["s"]):
             per.setdefault(int(mid), []).append((int(k), int(sv)))
-        for mid, arr in per.items():
-            st = states.get(
-                mid,
-                {"n_seen": 0, "buf_start": 0, "buf": [], "coeffs": []},
-            )
-            states[mid] = mdct_stream_step(st, arr)
-        # ONE payload row per batch (the elo pattern): 5k per-media rows
-        # through py4j cost ~1 s/batch; a single JSON blob is one row
-        payload = json.dumps({str(m): st for m, st in states.items()})
-        spark.createDataFrame(
-            [(payload,)], "payload string"
-        ).write.mode("overwrite").parquet(str(state_dir))
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        def advance(prev):
+            states = {} if prev is None else {
+                int(m): st
+                for m, st in json.loads(prev.first()["payload"]).items()
+            }
+            for mid, arr in per.items():
+                st = states.get(
+                    mid,
+                    {"n_seen": 0, "buf_start": 0, "buf": [], "coeffs": []},
+                )
+                states[mid] = mdct_stream_step(st, arr)
+            # ONE payload row per batch (the elo pattern): 5k per-media rows
+            # through py4j cost ~1 s/batch; a single JSON blob is one row
+            payload = json.dumps({str(m): st for m, st in states.items()})
+            return spark.createDataFrame([(payload,)], "payload string")
+
+        fold_state(spark, str(state_dir), advance, f"mdct{batch_id}")
+
+    replay_files(spark, str(src / "part*"), feed.schema, fold)
 
     import math
 

@@ -152,15 +152,11 @@ def q_streaming_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     from pathlib import Path
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="psi_stream_"))
     src, state = base / "src", base / "state"
     ev = read_table(spark, sf_dir, "events").select("event_id", "value")
@@ -171,12 +167,6 @@ def q_streaming_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(_PSI_MAX_BIN).cast("bigint"),
     )
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-
     def fold(batch_df, batch_id):
         cur = (
             batch_df.where(F.col("event_id") % 2 == 1)
@@ -184,20 +174,20 @@ def q_streaming_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("bin")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_curr"))
         )
-        try:
-            recover_table(spark, str(state))
-            merged = (
-                spark.read.parquet(str(state))
+
+        def advance(prev):
+            if prev is None:
+                return cur
+            return (
+                prev
                 .unionByName(cur)
                 .groupBy("bin")
                 .agg(F.sum("n_curr").cast("bigint").alias("n_curr"))
             )
-            atomic_overwrite(merged, str(state), f"psi{batch_id}")
-        except Exception:
-            cur.write.mode("overwrite").parquet(str(state))
 
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
+        fold_state(spark, str(state), advance, f"psi{batch_id}")
+
+    replay_files(spark, str(src), ev.schema, fold)
 
     cur = spark.read.parquet(str(state))
     baseline = (

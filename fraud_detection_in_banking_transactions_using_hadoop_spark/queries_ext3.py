@@ -573,30 +573,16 @@ def q_streaming_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     from pathlib import Path
 
-    from pyspark.sql import types as T
-
     from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
         incremental_agg_update,
+        replay_files,
     )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import normalize_runtime_conf
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="inc_agg_"))
-    src, state, ckpt = base / "src", base / "state", base / "ckpt"
+    src, state = base / "src", base / "state"
     # split events into 4 files so the replay is genuinely multi-batch
-    events = read_table(spark, sf_dir, "events")
-    events.select("user_id", "value").repartition(4).write.parquet(str(src))
-
-    stream = (
-        spark.readStream.schema(
-            T.StructType([
-                T.StructField("user_id", T.LongType()),
-                T.StructField("value", T.DoubleType()),
-            ])
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
+    events = read_table(spark, sf_dir, "events").select("user_id", "value")
+    events.repartition(4).write.parquet(str(src))
 
     def fold(batch_df, batch_id):
         incremental_agg_update(
@@ -604,15 +590,7 @@ def q_streaming_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             token=f"b{batch_id}",
         )
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", str(ckpt))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    replay_files(spark, str(src), events.schema, fold)
 
     final = spark.read.parquet(str(state))
     return final.select(

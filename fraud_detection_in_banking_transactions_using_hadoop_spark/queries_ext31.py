@@ -186,44 +186,34 @@ def fold_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     from pathlib import Path
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="hll_stream_"))
     src, state = base / "src", base / "state"
     ev = read_table(spark, sf_dir, "events").select("event_type", "user_id")
     ev.repartition(4).write.parquet(str(src))
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-
     def fold(batch_df, batch_id):
         sk = batch_df.groupBy("event_type").agg(
             F.expr("hll_sketch_agg(user_id)").alias("sk")
         )
-        try:
-            recover_table(spark, str(state))
-            merged = (
-                spark.read.parquet(str(state))
+
+        def advance(prev):
+            if prev is None:
+                return sk
+            return (
+                prev
                 .unionByName(sk)
                 .groupBy("event_type")
                 .agg(F.expr("hll_union_agg(sk)").alias("sk"))
             )
-            atomic_overwrite(merged, str(state), f"hll{batch_id}")
-        except Exception:
-            sk.write.mode("overwrite").parquet(str(state))
 
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
+        fold_state(spark, str(state), advance, f"hll{batch_id}")
+
+    replay_files(spark, str(src), ev.schema, fold)
 
     return spark.read.parquet(str(state)).select(
         "event_type", F.expr("hll_sketch_estimate(sk)").cast("bigint").alias("est")

@@ -61,15 +61,11 @@ def q_streaming_median_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     from pathlib import Path
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="median_stream_"))
     src, state = base / "src", base / "state"
     ev = read_table(spark, sf_dir, "events").select(
@@ -77,28 +73,22 @@ def q_streaming_median_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ev.repartition(4).write.parquet(str(src))
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-
     def fold(batch_df, batch_id):
         cur = batch_df.groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        try:
-            recover_table(spark, str(state))
-            merged = (
-                spark.read.parquet(str(state))
+
+        def advance(prev):
+            if prev is None:
+                return cur
+            return (
+                prev
                 .unionByName(cur)
                 .groupBy("v")
                 .agg(F.sum("c").cast("bigint").alias("c"))
             )
-            atomic_overwrite(merged, str(state), f"med{batch_id}")
-        except Exception:
-            cur.write.mode("overwrite").parquet(str(state))
 
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
+        fold_state(spark, str(state), advance, f"med{batch_id}")
+
+    replay_files(spark, str(src), ev.schema, fold)
 
     spine = spark.read.parquet(str(state))
     wv = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)

@@ -69,25 +69,15 @@ def q_streaming_page_hinkley_replay(spark: SparkSession, sf_dir: str) -> DataFra
     import tempfile
     from pathlib import Path
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="ph_stream_"))
     src, state = base / "src", base / "state"
     ev = read_table(spark, sf_dir, "events").select("ts", "value")
     ev.repartition(4).write.parquet(str(src))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
 
     def fold(batch_df, batch_id):
         cur = (
@@ -98,20 +88,20 @@ def q_streaming_page_hinkley_replay(spark: SparkSession, sf_dir: str) -> DataFra
             .groupBy("dt")
             .agg(F.sum("cents").cast("bigint").alias("x"))
         )
-        try:
-            recover_table(spark, str(state))
-            merged = (
-                spark.read.parquet(str(state))
+
+        def advance(prev):
+            if prev is None:
+                return cur
+            return (
+                prev
                 .unionByName(cur)
                 .groupBy("dt")
                 .agg(F.sum("x").cast("bigint").alias("x"))
             )
-            atomic_overwrite(merged, str(state), f"ph{batch_id}")
-        except Exception:
-            cur.write.mode("overwrite").parquet(str(state))
 
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
+        fold_state(spark, str(state), advance, f"ph{batch_id}")
+
+    replay_files(spark, str(src), ev.schema, fold)
 
     d = spark.read.parquet(str(state))
     tot = d.agg(
@@ -172,15 +162,11 @@ def q_streaming_topk_sample_replay(spark: SparkSession, sf_dir: str) -> DataFram
     import tempfile
     from pathlib import Path
 
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        atomic_overwrite,
-        recover_table,
-    )
-    from fraud_detection_in_banking_transactions_using_hadoop_spark.session import (
-        normalize_runtime_conf,
+    from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.incremental import (
+        fold_state,
+        replay_files,
     )
 
-    normalize_runtime_conf(spark)
     base = Path(tempfile.mkdtemp(prefix="res_stream_"))
     src, state = base / "src", base / "state"
     ev = read_table(spark, sf_dir, "events").select("event_id", "value")
@@ -193,30 +179,24 @@ def q_streaming_topk_sample_replay(spark: SparkSession, sf_dir: str) -> DataFram
     ) / 4294967297.0
     key = -F.log(u) / F.greatest(F.col("value"), F.lit(0.01))
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-
     def fold(batch_df, batch_id):
         cand = batch_df.select(
             "event_id", "value", key.alias("k")
         ).orderBy("k", "event_id").limit(_RES_K)
-        try:
-            recover_table(spark, str(state))
-            merged = (
-                spark.read.parquet(str(state))
+
+        def advance(prev):
+            if prev is None:
+                return cand
+            return (
+                prev
                 .unionByName(cand)
                 .orderBy("k", "event_id")
                 .limit(_RES_K)
             )
-            atomic_overwrite(merged, str(state), f"res{batch_id}")
-        except Exception:
-            cand.write.mode("overwrite").parquet(str(state))
 
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
+        fold_state(spark, str(state), advance, f"res{batch_id}")
+
+    replay_files(spark, str(src), ev.schema, fold)
 
     res = spark.read.parquet(str(state))
     w = Window.orderBy("k", "event_id")

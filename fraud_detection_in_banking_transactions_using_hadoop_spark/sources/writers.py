@@ -94,11 +94,11 @@ def compact_table(
     crash-safe rename protocol (operators/merge.py) -- readers never
     see a partial table. Returns the number of output files."""
     from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        _hadoop_fs,
         atomic_overwrite,
+        hadoop_fs,
     )
 
-    fs, jvm = _hadoop_fs(spark, path)
+    fs, jvm = hadoop_fs(spark, path)
     P = jvm.org.apache.hadoop.fs.Path
     total_bytes = fs.getContentSummary(P(path)).getLength()
     n_files = max(1, int(total_bytes / (target_file_mb * 1024 * 1024)) or 1)
@@ -128,15 +128,12 @@ def audited_overwrite(
     publish is two metadata renames.
     """
     from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        _hadoop_fs,
-        _rename_or_raise,
-        _sweep_stale_stages,
+        publish_staged,
+        write_staged,
     )
 
     spark = df.sparkSession
-    target = path.rstrip("/")
-    staging = f"{target}__stage_{token}"
-    df.write.mode("overwrite").parquet(staging)
+    staging = write_staged(df, path, token)
     staged = spark.read.parquet(staging)
     results = {name: bool(fn(staged)) for name, fn in checks}
     if not all(results.values()):
@@ -145,14 +142,5 @@ def audited_overwrite(
             f"write audit failed ({failed}); staging kept at {staging}, "
             f"live table untouched"
         )
-    fs, jvm = _hadoop_fs(spark, target)
-    P = jvm.org.apache.hadoop.fs.Path
-    old = P(target + "__old")
-    if fs.exists(old):
-        fs.delete(old, True)
-    if fs.exists(P(target)):
-        _rename_or_raise(fs, P(target), old)
-    _rename_or_raise(fs, P(staging), P(target))
-    fs.delete(old, True)
-    _sweep_stale_stages(fs, jvm, target)
+    publish_staged(spark, staging, path)
     return results

@@ -168,11 +168,11 @@ def test_atomic_overwrite_raises_on_failed_rename(spark, tmp_path):
     swap must raise so foreachBatch fails and the checkpoint replays,
     instead of silently committing a missing table."""
     from fraud_detection_in_banking_transactions_using_hadoop_spark.operators.merge import (
-        _hadoop_fs,
         _rename_or_raise,
+        hadoop_fs,
     )
 
-    fs, jvm = _hadoop_fs(spark, str(tmp_path))
+    fs, jvm = hadoop_fs(spark, str(tmp_path))
     P = jvm.org.apache.hadoop.fs.Path
     # existing destination: rename returns false, not raise (missing-src
     # throws and missing-dest-parent is healed by the local FS copy
